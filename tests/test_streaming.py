@@ -8,6 +8,8 @@ Sources are file streams of pre-decoded canal entries / binlog rows
 import os
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
@@ -198,6 +200,104 @@ def test_window_job_matches_batch_and_drops_late(spark, tmp_path, binlog_df):
         assert got.count() == want.count(), stem
         w = want.select(*got.columns)
         assert got.exceptAll(w).count() == 0 and w.exceptAll(got).count() == 0, stem
+
+
+def test_window_epoch_runs_stateful_plan_once(spark, tmp_path, binlog_df):
+    """Each window epoch evaluates its micro-batch once. Every action on
+    the micro-batch re-runs the stateful aggregation, and each run adds
+    its state-store counts to the epoch's progress, so a body that checks
+    for rows and then writes reports numRowsTotal twice over. The state
+    store itself is the reference: its row count at each batch must equal
+    what the progress reports."""
+    src = str(tmp_path / "binlog_src")
+    mid = binlog_df.selectExpr("percentile_approx(execute_time, 0.5)").first()[0]
+    early = F.col("execute_time") < F.lit(mid)
+    binlog_df.filter(early).coalesce(1).write.parquet(src)
+    binlog_df.filter(~early).coalesce(1).write.mode("append").parquet(src)
+    ckpt = str(tmp_path / "ckpt")
+    results = str(tmp_path / "results")
+    stream = (
+        spark.readStream.schema(binlog_df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    q = window_job.run_window_job(stream, results, ckpt, available_now=True)
+    q.awaitTermination(180)
+
+    stateful = [p for p in q.recentProgress if p.stateOperators]
+    assert [p.numInputRows > 0 for p in stateful][:2] == [True, True]
+    emitted = 0
+    for p in stateful:
+        op = p.stateOperators[0]
+        in_store = (
+            spark.read.format("statestore")
+            .option("batchId", p.batchId)
+            .load(ckpt)
+            .count()
+        )
+        assert op.numRowsTotal == in_store, (p.batchId, op.numRowsTotal)
+        emitted += op.numRowsRemoved
+    # the second file's watermark closes windows, so an epoch did publish
+    assert emitted > 0
+    stem = next(iter(transactions.METRICS.values()))
+    assert window_job.read_results(spark, results, stem).count() > 0
+
+
+_metric = st.one_of(st.none(), st.integers(0, 3))
+
+
+@given(
+    st.dictionaries(
+        st.tuples(st.integers(0, 2), st.sampled_from(["g0", "g1", "g2", "g3"])),
+        st.tuples(_metric, _metric, _metric),
+        min_size=1,
+        max_size=12,
+    )
+)
+@settings(max_examples=10, deadline=None)
+def test_top_transactions_all_matches_per_metric(spark, stats_rows):
+    """The one-exchange top-1 holds, per metric, exactly the rows of
+    ``top_transactions``: under tied values, the same gtid in several
+    windows, and NULL metrics (last under ``desc``)."""
+    cols = ["transaction_spend_time", "transaction_size",
+            "transaction_affected_rows"]
+    # an inline literal table: built in the JVM, no Python-worker round trip
+    stats = spark.range(1).select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(f"w{w}").alias("window_start"),
+                        F.lit(f"e{w}").alias("end_time"),
+                        F.lit(gtid).alias("gtid"),
+                        *[
+                            F.lit(v).cast("long").alias(c)
+                            for c, v in zip(cols, vals)
+                        ],
+                        F.lit(1).cast("long").alias("statement_count"),
+                    )
+                    for (w, gtid), vals in stats_rows.items()
+                ]
+            )
+        )
+    )
+    key = ["window_start", "end_time", "gtid", *cols, "statement_count"]
+    one_pass = transactions.top_transactions_all(stats)
+    both = None  # one job: (side, metric, row) for both forms
+    for m in transactions.METRICS:
+        for side, rows in (
+            ("one_pass", one_pass.filter(F.col(transactions.top1_flag(m)))),
+            ("per_metric", transactions.top_transactions(stats, m)),
+        ):
+            part = rows.select(F.lit(side), F.lit(m), *key)
+            both = part if both is None else both.unionAll(part)
+    got = {"one_pass": set(), "per_metric": set()}
+    for r in both.collect():
+        got[r[0]].add(tuple(r[1:]))
+    assert got["one_pass"] == got["per_metric"]
+    # one row per window and metric
+    n_windows = len({w for w, _ in stats_rows})
+    assert len(got["one_pass"]) == n_windows * len(transactions.METRICS)
 
 
 def test_foreachbatch_bodies_are_replay_idempotent(spark, tmp_path, binlog_df):

@@ -31,6 +31,9 @@ most-time-consuming / most-affected-rows swapped at
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -86,6 +89,16 @@ def transaction_stats(
     )
 
 
+def _top1_window(metric: str) -> Window:
+    """The one definition of T2's per-window order: ``metric`` descending
+    (NULLs last), then gtid ascending as the deterministic tie-break."""
+    if metric not in METRICS:
+        raise ValueError(f"unknown metric {metric!r}; one of {sorted(METRICS)}")
+    return Window.partitionBy("window_start").orderBy(
+        F.col(metric).desc(), F.col("gtid").asc()
+    )
+
+
 def top_transactions(stats: DataFrame, metric: str) -> DataFrame:
     """Top-1 transaction per window by ``metric`` (T2).
 
@@ -93,29 +106,48 @@ def top_transactions(stats: DataFrame, metric: str) -> DataFrame:
     deterministic — the reference's ``ORDER BY metric DESC LIMIT 1`` is
     nondeterministic under ties (SURVEY.md §5.4).
     """
-    if metric not in METRICS:
-        raise ValueError(f"unknown metric {metric!r}; one of {sorted(METRICS)}")
-    w = Window.partitionBy("window_start").orderBy(
-        F.col(metric).desc(), F.col("gtid").asc()
-    )
     return (
-        stats.withColumn("rn", F.row_number().over(w))
+        stats.withColumn("rn", F.row_number().over(_top1_window(metric)))
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
 
 
-def transaction_result_table(
-    stats: DataFrame, metric: str, interval_seconds: int = 300
-) -> DataFrame:
-    """Shape the top-1 rows like the reference result tables.
+def top1_flag(metric: str) -> str:
+    """Name of :func:`top_transactions_all`'s flag column for ``metric``."""
+    return f"top1_{metric}"
+
+
+def top_transactions_all(stats: DataFrame) -> DataFrame:
+    """The rows of ``stats`` that are top-1 for ANY of the :data:`METRICS`,
+    each with one boolean :func:`top1_flag` column per metric.
+
+    ``top_transactions_all(stats).filter(top1_flag(m))`` holds the same
+    rows as ``top_transactions(stats, m)``: the same window spec ranks
+    both. All three ``row_number`` columns share the ``window_start``
+    partitioning, so the plan has ONE exchange (three sorts over it)
+    instead of one exchange per metric, and the result is at most three
+    rows per window.
+    """
+    ranked = stats.withColumns(
+        {
+            top1_flag(m): F.row_number().over(_top1_window(m)) == 1
+            for m in METRICS
+        }
+    )
+    return ranked.filter(
+        reduce(operator.or_, (F.col(top1_flag(m)) for m in METRICS))
+    )
+
+
+def result_columns(top: DataFrame, interval_seconds: int = 300) -> DataFrame:
+    """Shape top-1 rows like the reference result tables.
 
     Columns per ``README.md:268-281``: ``end_time`` (window high watermark,
     P8 constant projection ``compute_transaction_info.py:55``), ``invertal``
     [sic — reference's column name, ``README.md:271``] = window length in
     seconds as a string, gtid + the three metrics.
     """
-    top = top_transactions(stats, metric)
     return top.select(
         "end_time",
         F.lit(str(interval_seconds)).alias("invertal"),
@@ -124,3 +156,11 @@ def transaction_result_table(
         "transaction_size",
         F.col("transaction_affected_rows").alias("single_statement_affected_rows"),
     )
+
+
+def transaction_result_table(
+    stats: DataFrame, metric: str, interval_seconds: int = 300
+) -> DataFrame:
+    """The reference result table for ``metric``: its top-1 rows shaped by
+    :func:`result_columns`."""
+    return result_columns(top_transactions(stats, metric), interval_seconds)

@@ -1951,121 +1951,79 @@ def tokens_per_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: tests/test_driver_window.py::test_changed_this_round_is_fresh derives
 #: the current round from the committed CORRECTNESS files and fails at
 #: next round's start until both constants are re-derived.
-CHANGED_ROUND = 15
+CHANGED_ROUND = 16
 
 CHANGED_THIS_ROUND: list[str] = [
-    # Round 15 (optimization round 2/2 — VERDICT r14 next #1): the
-    # translator's map-State expansion is structurally rewritten to a
-    # two-level GROUP BY (per-key pre-aggregation subquery) so the
-    # exchange carries partial per-key aggregates instead of collected
-    # row lists; results and oracle UNCHANGED, plan changes at every SF.
-    # The only registered consumer of a map-State expansion; r14-green,
-    # so its re-proof takes the round's one free window slot:
-    "ch_agg_states_map_rollup",
-    # implementation-changed (same rewrite, histogram kind): the
-    # quantile/tdigest-State expansion is pre-aggregated the same way.
-    # Already stale-in-window (r13-only-green), so the re-proof slot is
-    # free:
-    "ch_agg_states_tdigest_rollup",
-    # implementation-changed (guide §2.4 — the r14 §8.2 exchange-count
-    # item): `_band_buckets`' bucket cap is a COUNT window instead of a
-    # groupBy+join back onto the bands (one exchange and no join where
-    # there were four and one; output verified row-identical at sf10,
-    # symmetric diff 0). These five are every registered consumer of
-    # the capped band table; all were already stale-in-window
-    # (r13-only-green), so their re-proof slots are free:
-    "dedup_minhash_lsh_staged",
-    "dedup_apply_minhash",
-    "dedup_incremental",
-    "dedup_connected_components",
-    "dedup_apply_connected_components",
-    # NOT listed although `write_line_posting` gained the same
-    # scale-adaptive partition derivation as the shingle posting (r15):
-    # at every driver SF the derivation returns the historical constant
-    # 8, so `line_dedup_staged`'s staged layout and plan there are
-    # bit-identical — the same below-the-gate argument (and the same
-    # derivation function + test pin, test_posting_partition_derivation)
-    # as r14's shingle-posting non-listing. Likewise the DISK_ONLY/
-    # batch-size cache policy (operators/cachetrack.py) is gated on a
-    # 256 MiB backing size no driver SF reaches, so no cache-consumer
-    # plan or layout changes below it.
+    # Round 16: no registry query changed. The streaming window job
+    # ranks all three metrics over one exchange
+    # (``transactions.top_transactions_all``), but the registry's batch
+    # path (``top_transactions`` / ``transaction_result_table``) keeps
+    # its plan: ``top_transactions`` only moved its window spec into the
+    # shared ``_top1_window`` helper, which builds the identical spec.
 ]
-# ROTATION BUDGET (round 15): 44 queries are green only in
-# CORRECTNESS_r13 (recomputed from the committed r13/r14 files); with
-# the 5 headline rows that fills 49 of the 50 window slots, leaving
-# EXACTLY ONE slot for a changed query that is not already stale.
-# Slot ledger:
-#   1. `ch_agg_states_map_rollup` — the -State pre-aggregation rewrite
-#      voids its r14 proof; takes the free slot (window exactly full).
-# Consequence for this optimization round: every other plan-affecting
-# change must either target a query already in the stale set (e.g.
-# `ch_agg_states_tdigest_rollup`, `dedup_minhash_lsh_staged` — free
-# re-proof slots) or sit behind a size gate that keeps driver-SF plans
-# bit-identical (the r14 posting-derivation / two-level-dispatch
-# pattern, pinned by plan-diff tests).
+# ROTATION BUDGET (round 16): 44 queries are green only in
+# CORRECTNESS_r14 (recomputed from the committed r14/r15 files); with
+# the 5 headline rows that fills 49 of the 50 window slots, leaving one
+# slot free for a changed query that is not already stale.
 
 DRIVER_WINDOW_PRIORITY = [
-    # -- 1. implementation-changed this round (round 15) with a voided
-    #       proof — no valid driver proof until CORRECTNESS_r15:
-    "ch_agg_states_map_rollup",
-    # -- 2. green only in CORRECTNESS_r13 (rotated out of the r14
+    # -- 1. green only in CORRECTNESS_r14 (rotated out of the r15
     #       window); their proof ages out of the 2-round invariant
-    #       unless re-verified in r15. Exactly the 44 registry queries
-    #       green in r13 but absent from CORRECTNESS_r14.json's green
+    #       unless re-verified in r16. Exactly the 44 registry queries
+    #       green in r14 but absent from CORRECTNESS_r15.json's green
     #       set.
-    "aggregating_rollup_merge",
-    "benchmark_contamination",
-    "ch_agg_states_bitmap_rollup",
-    "ch_agg_states_rollup",
-    "ch_agg_states_tdigest_rollup",
-    "ch_prewhere_profile",
-    "ch_top_event_limit_by",
-    "collapsing_merge_state",
-    "corpus_source_cap",
-    "corpus_top_bigrams",
-    "daily_count_anomalies",
-    "daily_distinct_gtids_approx",
-    "daily_distinct_gtids_approx_check",
-    "daily_event_counts_by_table",
-    "dedup_apply_connected_components",
-    "dedup_apply_minhash",
-    "dedup_connected_components",
-    "dedup_exact",
-    "dedup_incremental",
-    "dedup_minhash_lsh_staged",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "dedup_span_crossdoc",
-    "doc_chunks",
-    "doc_fingerprint",
-    "embedding_kmeans",
-    "embedding_kmeans_assign",
-    "embedding_kmeans_inertia_check",
-    "embedding_quantization_error",
-    "language_mixture_weights",
-    "large_order_customers",
-    "line_dedup_staged",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_resize",
-    "order_priority_counts",
-    "promo_revenue",
-    "quality_gopher_flags",
-    "replacing_merge_final",
-    "retention_cohorts",
-    "sequence_pack",
-    "similarity_ivf_topk_two_level",
-    "size_quantiles_approx",
-    "size_quantiles_approx_check",
-    # -- 3. reference-core headline queries (verified every round)
+    "asof_trade_quote",
+    "binlog_gap_report",
+    "ch_dashboard_rollup",
+    "ch_if_combinators_json",
+    "corpus_curate_gopher",
+    "corpus_curate_materialize",
+    "corpus_length_histogram",
+    "corpus_train_test_split",
+    "daily_counts_gapfilled",
+    "daily_counts_moving_avg",
+    "day_over_day_counts",
+    "dedup_embedding_cosine",
+    "dedup_ngram_jaccard_staged",
+    "event_count_cube",
+    "event_type_decode_dim_join",
+    "gtid_set_operations",
+    "idempotent_window_antijoin",
+    "ingest_transform",
+    "multi_cluster_daily_counts",
+    "multimodal_metadata",
+    "nation_revenue",
+    "nation_top_customer",
+    "pricing_summary",
+    "range_join_maintenance_windows",
+    "retention_filter",
+    "scalar_functions",
+    "session_windows",
+    "similarity_batch_topk",
+    "similarity_batch_topk_two_level",
+    "similarity_ivf_topk_nprobe",
+    "similarity_lsh_topk",
+    "similarity_topk_bruteforce",
+    "size_mad_per_type",
+    "size_quantiles",
+    "skew_salted_table_profile",
+    "summing_rollup_reaggregate",
+    "text_language_id",
+    "text_pii_scrub",
+    "text_quality_score",
+    "text_repetition_score",
+    "text_token_count",
+    "top_revenue_orders",
+    "window_funnel",
+    "windowed_running_size",
+    # -- 2. reference-core headline queries (verified every round)
     "transaction_stats",
     "top_transaction_by_size",
     "top_transaction_by_spend_time",
     "top_transaction_by_affected_rows",
     "transaction_result_table",
-    # -- (1 re-proof + 44 stale + 5 headline = 50 priority entries:
-    #       the window is exactly full. See the ROTATION BUDGET note
-    #       above.)
+    # -- (44 stale + 5 headline = 49 priority entries; the 50th slot
+    #       takes the next query in registration order.)
 ]
 
 

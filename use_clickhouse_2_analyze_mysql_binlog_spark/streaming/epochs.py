@@ -30,6 +30,8 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 
 def epoch_committed(sink_path: str, epoch_id: int) -> bool:
@@ -45,6 +47,24 @@ def mark_epoch_committed(sink_path: str, epoch_id: int) -> None:
     with open(tmp, "w", encoding="utf-8") as fh:
         fh.write("")
     os.replace(tmp, os.path.join(d, str(epoch_id)))
+
+
+@contextmanager
+def evaluated_once(df) -> Iterator[int]:
+    """Persist ``df`` and count it in one job; yields the row count and
+    unpersists on exit.
+
+    Every action on a micro-batch DataFrame re-runs its whole plan: the
+    source read, any decode, and the stateful operator with its state
+    store. A body that checks for rows and then writes would run that
+    plan twice per epoch. Inside this block every action reads the
+    cached rows instead, so the epoch's plan runs exactly once.
+    """
+    df.persist()
+    try:
+        yield df.count()
+    finally:
+        df.unpersist()
 
 
 def _manifest_path(root: str) -> str:

@@ -16,9 +16,21 @@ with a count() existence check) with event-time streaming:
 
 The aggregation emits in ``append`` mode (only finalized windows), and
 foreachBatch ranks top-1 per window per metric (T2) before appending to
-the three result tables — ranking happens on finalized window stats, a few
-rows per window, so the per-epoch work is trivial regardless of fact
-volume.
+the three result tables. The per-epoch plan is:
+
+1. ONE execution of the stateful aggregation (state-store read, update,
+   eviction of the windows the watermark closed). Every action on the
+   micro-batch would re-run it, so only the caching job of step 2 reads
+   the micro-batch;
+2. ONE exchange on ``window_start`` under it, where three ``row_number``
+   flags pick the rows that are top-1 for any metric
+   (``transactions.top_transactions_all``). That tiny result (at most
+   three rows per closed window) is cached and counted in the same job;
+3. three single-file writes, one per metric, filtered from the cached
+   rows, then the one ``TxnSink`` commit.
+
+An epoch that closes no window counts zero rows in step 2 and commits
+nothing.
 """
 
 from __future__ import annotations
@@ -30,7 +42,9 @@ from pyspark.sql.streaming import StreamingQuery
 from use_clickhouse_2_analyze_mysql_binlog_spark.operators.transactions import (
     METRICS,
     TS_FMT,
-    top_transactions,
+    result_columns,
+    top1_flag,
+    top_transactions_all,
 )
 from use_clickhouse_2_analyze_mysql_binlog_spark.streaming import epochs
 
@@ -80,36 +94,36 @@ def make_publish_batch(
     results_path: str, interval_seconds: int = 300, run_id: str = "local"
 ):
     """The per-epoch publish body (module-level so replay behavior is
-    unit-testable). Exactly-once across ALL THREE result tables: each
-    epoch stages its ``<stem>/epoch=<run_id>-<id>`` directories
-    (overwrite => a replayed crash rewrites them) and ONE atomic manifest
-    update commits the epoch — there is no state where one metric's table
-    has the epoch's windows and another's doesn't. The run id namespaces a
-    fresh checkpoint's restarted epoch counter away from an old run's
-    directories."""
+    unit-testable).
+
+    The epoch's windowed stats are ranked for all three metrics over one
+    exchange, and that result is cached and counted in one job; this is
+    the only execution of the stateful plan in the epoch. No rows (no
+    window closed) means no commit. Otherwise each metric's rows are
+    written from the cache as one file each.
+
+    Exactly-once across ALL THREE result tables: each epoch stages its
+    ``<stem>/epoch=<run_id>-<id>`` directories (overwrite => a replayed
+    crash rewrites them) and ONE atomic manifest update commits the epoch
+    — there is no state where one metric's table has the epoch's windows
+    and another's doesn't. The run id namespaces a fresh checkpoint's
+    restarted epoch counter away from an old run's directories."""
 
     sink = epochs.TxnSink(results_path, tuple(METRICS.values()), run_id)
 
     def publish_batch(batch: DataFrame, epoch: int) -> None:
-        if sink.epoch_committed(epoch) or batch.isEmpty():
+        if sink.epoch_committed(epoch):
             return
-        batch.persist()
-        try:
+        top = top_transactions_all(batch)
+        with epochs.evaluated_once(top) as n:
+            if not n:
+                return
             for metric, stem in METRICS.items():
-                top = top_transactions(batch, metric).select(
-                    "end_time",
-                    F.lit(str(interval_seconds)).alias("invertal"),
-                    "gtid",
-                    "transaction_spend_time",
-                    "transaction_size",
-                    F.col("transaction_affected_rows").alias(
-                        "single_statement_affected_rows"
-                    ),
+                rows = result_columns(
+                    top.filter(F.col(top1_flag(metric))), interval_seconds
                 )
-                sink.write(stem, epoch, top)
+                sink.write(stem, epoch, rows.coalesce(1))
             sink.commit(epoch)
-        finally:
-            batch.unpersist()
 
     return publish_batch
 
