@@ -27,8 +27,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
-from use_clickhouse_2_analyze_mysql_binlog_spark.streaming import epochs
-
 
 @dataclass
 class JdbcSinkConfig:
@@ -81,13 +79,6 @@ def foreach_batch_writer(
     guard: ``existing_keys(batch)`` returns the sink-side key rows that
     already exist (typically ``spark.read.jdbc`` on a key-filtered
     pushdown query); the epoch then left-anti joins before writing.
-
-    The epoch's rows are cached once and written from the cache. AQE does
-    not coalesce a cached plan's partitions
-    (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` is off
-    by default), so after a shuffled anti-join the write runs one task,
-    and one connection, per shuffle partition; set ``cfg.num_partitions``
-    to bound that.
     """
 
     def publish(batch: DataFrame, _epoch: int) -> None:
@@ -95,10 +86,8 @@ def foreach_batch_writer(
         if dedup_keys and existing_keys is not None:
             present = existing_keys(batch).select(*dedup_keys)
             out = batch.join(present, list(dedup_keys), "left_anti")
-        # the emptiness check and the write share one evaluation of the
-        # epoch (and of the existing-keys read behind the anti-join)
-        with epochs.evaluated_once(out) as n:
-            if n:
-                write_batch(out, cfg, writer)
+        if out.isEmpty():
+            return
+        write_batch(out, cfg, writer)
 
     return publish

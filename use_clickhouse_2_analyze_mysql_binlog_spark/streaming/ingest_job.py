@@ -101,10 +101,7 @@ def make_constraint_gate(
     passing rows continue to the sink. A NULL check result counts as a
     violation (CH requires the expression be true).
 
-    Returns ``gate(rows, epoch) -> passing_rows``. The gate runs an
-    action on ``rows`` before its caller writes the passing rows, so the
-    caller evaluates ``rows`` once for both (``epochs.evaluated_once``,
-    as :func:`run_ingest_stream` does).
+    Returns ``gate(rows, epoch) -> passing_rows``.
     """
     if on_violation not in ("quarantine", "fail"):
         raise ValueError(
@@ -272,18 +269,13 @@ def run_ingest_stream(
         txn=txn,
         run_id=run_id,
     )
-    if constraints:
-        gate = make_constraint_gate(
+    gate = (
+        make_constraint_gate(
             constraints, quarantine_path, run_id, on_violation
         )
-
-        def write_rows(rows: DataFrame, epoch: int) -> None:
-            # the gate's violation check and the append share one
-            # evaluation of the epoch's rows
-            with epochs.evaluated_once(rows):
-                append_batch(gate(rows, epoch), epoch)
-    else:
-        write_rows = append_batch
+        if constraints
+        else (lambda rows, epoch: rows)
+    )
     if "_decode_error" in entries_stream.columns and dead_letter_path is None:
         # Loud-or-routed contract (ADVICE r07 #1): a routed stream
         # (decode_packets on_error='route') whose all-NULL poison rows
@@ -302,39 +294,38 @@ def run_ingest_stream(
             "day", F.to_date("execute_time")
         )
 
+        def gated_batch(batch: DataFrame, epoch: int) -> None:
+            append_batch(gate(batch, epoch), epoch)
+
         writer = (
             binlog.writeStream.queryName("ingest").outputMode("append")
             .option("checkpointLocation", checkpoint_path)
-            .foreachBatch(write_rows)
+            .foreachBatch(gated_batch)
         )
         if available_now:
             writer = writer.trigger(availableNow=True)
         return writer.start()
 
     def routed_batch(batch: DataFrame, epoch: int) -> None:
-        # the dead-letter check and the good-row write share one decode
-        # of the epoch's packets
-        with epochs.evaluated_once(batch):
-            bad = batch.filter(F.col("_decode_error").isNotNull()).select(
-                F.current_timestamp().alias("dead_lettered_at"),
-                "_decode_error",
-                "_raw",
+        bad = batch.filter(F.col("_decode_error").isNotNull()).select(
+            F.current_timestamp().alias("dead_lettered_at"),
+            "_decode_error",
+            "_raw",
+        )
+        if not bad.isEmpty():
+            # per-epoch overwrite directory: replay rewrites, never dups.
+            # coalesce(1) is bounded by MALFORMED-message volume (normally
+            # zero rows), never by stream volume — not a data-sized rail.
+            bad.coalesce(1).write.mode("overwrite").parquet(
+                f"{dead_letter_path}/epoch={run_id}-{epoch}"
             )
-            if not bad.isEmpty():
-                # per-epoch overwrite directory: replay rewrites, never
-                # dups. coalesce(1) is bounded by MALFORMED-message volume
-                # (normally zero rows), never by stream volume — not a
-                # data-sized rail.
-                bad.coalesce(1).write.mode("overwrite").parquet(
-                    f"{dead_letter_path}/epoch={run_id}-{epoch}"
-                )
-            good = batch.filter(F.col("_decode_error").isNull()).drop(
-                "_decode_error", "_raw"
-            )
-            rows = canal_entries_to_binlog(good).withColumn(
-                "day", F.to_date("execute_time")
-            )
-            write_rows(rows, epoch)
+        good = batch.filter(F.col("_decode_error").isNull()).drop(
+            "_decode_error", "_raw"
+        )
+        rows = canal_entries_to_binlog(good).withColumn(
+            "day", F.to_date("execute_time")
+        )
+        append_batch(gate(rows, epoch), epoch)
 
     writer = (
         entries_stream.writeStream.queryName("ingest").outputMode("append")
