@@ -17,8 +17,7 @@ stdout and json-parses the final line, so the line must FIT):
   as a POSITIONAL integer-millisecond array in sorted-name order with a
   crc32 name-list signature (``qsig``); decode with
   ``benchfmt.decode_queries_positional(doc["queries"], doc["qunit"],
-  sorted_names, doc["qsig"])`` against the registry at the same commit
-  (the older nested-dict shape decodes via ``decode_queries``) —
+  sorted_names, doc["qsig"])`` against the registry at the same commit —
   guaranteed under the tail budget so every registry query's number
   survives into ``BENCH_r{N}.json`` with ``parsed != null``;
 - the five headline queries are timed three times and keep the MINIMUM

@@ -51,23 +51,22 @@ from use_clickhouse_2_analyze_mysql_binlog_spark import benchfmt
 
 
 def _normalize(doc: dict) -> dict:
-    """Decode benchfmt's compact 'queries' payload into flat seconds:
-    positional array (round 5+, names from the registry at this commit,
-    qsig-verified) or nested integer dict (rounds 2-4)."""
+    """Decode benchfmt's positional 'queries' payload (round 5+, names
+    from the registry at this commit, qsig-verified) into flat seconds."""
     if "qunit" in doc:
-        doc = dict(doc)
-        if isinstance(doc["queries"], list):
-            from use_clickhouse_2_analyze_mysql_binlog_spark import (
-                queries_registry as R,
+        if not isinstance(doc["queries"], list):
+            raise ValueError(
+                "non-positional 'queries' payload: the nested-name shape "
+                "of bench rounds 2-4 is no longer decoded"
             )
+        from use_clickhouse_2_analyze_mysql_binlog_spark import (
+            queries_registry as R,
+        )
 
-            doc["queries"] = benchfmt.decode_queries_positional(
-                doc["queries"], doc["qunit"], list(R.QUERIES), doc.get("qsig")
-            )
-        else:
-            doc["queries"] = benchfmt.decode_queries(
-                doc["queries"], doc["qunit"]
-            )
+        doc = dict(doc)
+        doc["queries"] = benchfmt.decode_queries_positional(
+            doc["queries"], doc["qunit"], list(R.QUERIES), doc.get("qsig")
+        )
         doc.setdefault("total_all_queries", doc.get("total"))
         doc.setdefault("headline_passes", doc.get("hp"))
     return doc

@@ -1747,6 +1747,18 @@ def test_review_fixes_nested_types_joins_schema():
     assert [c.spark_type for c in t.columns] == [
         "array<string>", "decimal(18, 4)", "array<decimal(10, 2)>",
     ]
+    # array-literal defaults: the comma inside [..] is not a column split
+    t = ddl_compat.parse_statement(
+        "CREATE TABLE t (a Array(UInt8) DEFAULT [1, 2], b UInt8, "
+        "c Array(String) MATERIALIZED ['x', 'y']) "
+        "ENGINE = MergeTree ORDER BY b"
+    )
+    assert [(c.name, c.spark_type, c.default) for c in t.columns] == [
+        ("a", "array<int>", "[1, 2]"),
+        ("b", "int", None),
+        ("c", "array<string>", "['x', 'y']"),
+    ]
+    assert t.order_by == ("b",)
 
     script = """
 CREATE TABLE db.src (ts DateTime, user_id UInt64, k String) ENGINE = MergeTree() ORDER BY (ts);

@@ -20,8 +20,8 @@ Round-5 shape — **positional** values, names by reference:
   precision in the committed ``BENCH_FULL_r{N}_sf{sf}.json`` snapshots —
   decode with :func:`decode_queries_positional`.
 
-The legacy nested-name codec (:func:`encode_queries` /
-:func:`decode_queries`) is kept for reading rounds 2-4 artifacts.
+Rounds 2-4 wrote a nested-name dict; that codec is gone, so those
+artifacts no longer decode.
 
 The headline metric fields (``metric``/``value``/``unit``/``sf``) keep the
 spec shape and plain-seconds units; only the per-query payload is encoded.
@@ -30,73 +30,12 @@ spec shape and plain-seconds units; only the per-query payload is encoded.
 from __future__ import annotations
 
 import json
-import re
 
 # The driver keeps the last 2000 bytes of stdout; the final line plus its
 # newline must fit inside that window to survive intact.
 TAIL_BUDGET = 1990
 
 _UNIT_SCALE = {"ms": 1000, "cs": 100, "ds": 10, "s": 1}
-
-
-def _nest(flat: dict[str, float], depth: int = 0) -> dict:
-    """Group keys by their first ``_`` token, recursively (<=3 levels)."""
-    groups: dict[str, dict[str, float]] = {}
-    for key, val in flat.items():
-        if "_" in key and depth < 3:
-            tok, rest = key.split("_", 1)
-        else:
-            tok, rest = key, None
-        groups.setdefault(tok, {})[rest if rest is not None else ""] = val
-    out: dict = {}
-    for tok, members in groups.items():
-        if len(members) >= 2:
-            sub = _nest({k: v for k, v in members.items() if k != ""}, depth + 1)
-            if "" in members:
-                sub[""] = members[""]
-            out[tok] = sub
-        else:
-            ((rest, val),) = members.items()
-            out[(tok + "_" + rest) if rest else tok] = val
-    return out
-
-
-# Names the _-token nesting can represent losslessly: non-empty tokens
-# separated by single underscores. Leading/trailing/doubled underscores
-# would collide in _nest (e.g. 'foo' and 'foo_' both land on the '' key),
-# so encode_queries rejects them up front (ADVICE r04).
-_ENCODABLE_NAME = re.compile(r"^[^_]+(_[^_]+)*$")
-
-
-def encode_queries(timings_sec: dict[str, float], unit: str) -> dict:
-    """Nested dict of integer times in ``unit`` (lossless on names)."""
-    bad = [n for n in timings_sec if not _ENCODABLE_NAME.match(n)]
-    if bad:
-        raise ValueError(
-            f"query names not representable by the _-token nesting "
-            f"(leading/trailing/doubled underscore): {bad}"
-        )
-    scale = _UNIT_SCALE[unit]
-    return _nest(
-        {name: int(round(sec * scale)) for name, sec in timings_sec.items()}
-    )
-
-
-def decode_queries(nested: dict, unit: str) -> dict[str, float]:
-    """Invert :func:`encode_queries` back to flat ``{name: seconds}``."""
-    scale = _UNIT_SCALE[unit]
-    flat: dict[str, float] = {}
-
-    def walk(node: dict, prefix: str) -> None:
-        for key, val in node.items():
-            name = (prefix + "_" + key if key else prefix) if prefix else key
-            if isinstance(val, dict):
-                walk(val, name)
-            else:
-                flat[name] = val / scale
-
-    walk(nested, "")
-    return flat
 
 
 def name_signature(names: list[str]) -> str:

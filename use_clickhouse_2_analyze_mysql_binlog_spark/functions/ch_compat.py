@@ -266,16 +266,28 @@ onto Spark SQL equivalents that stay entirely JVM-side:
 This is a deliberate TEXTUAL translator for the documented subset, not a
 CH grammar: constructs outside the table raise nothing and pass through,
 so valid-ANSI remainders still run, and unknown CH-isms fail loudly in
-Spark's parser rather than silently changing semantics.
+Spark's parser rather than silently changing semantics. Literals, bracket
+depth and keyword boundaries follow the one lexical contract in
+:mod:`sqllex`, shared with :mod:`ddl_compat`.
 """
 
 from __future__ import annotations
 
 import re
+from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 
 from use_clickhouse_2_analyze_mysql_binlog_spark.functions import stats as _stats
+from use_clickhouse_2_analyze_mysql_binlog_spark.functions.sqllex import (
+    LITERAL,
+    find_top_level,
+    mask_literals,
+    matching_close,
+    owning_select,
+    split_top_level,
+    unmask,
+)
 
 # CH function -> Spark function, pure renames (argument lists unchanged).
 # NOTE: toUInt64 is NOT here — it needs the full unsigned range and
@@ -498,47 +510,28 @@ def _ch_type_to_spark(t: str) -> str | None:
 
 
 def _parse_args(sql: str, i: int) -> tuple[int, list[str]] | None:
-    """Parse a parenthesized argument list whose opening ``(`` sits just
-    before ``i``; return (end_exclusive, top_level_args), or None when
-    the parens never balance."""
-    depth, args, cur = 1, [], []
-    while i < len(sql):
-        c = sql[i]
-        if c == "'":  # skip string literal
-            j = i + 1
-            while j < len(sql) and sql[j] != "'":
-                j += 1
-            cur.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if c == "(":
-            depth += 1
-        elif c == "[":
-            # array literals nest too: the comma in [1, 2] must not
-            # split a call argument
-            depth += 1
-        elif c == "]":
-            depth -= 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                args.append("".join(cur).strip())
-                return (i + 1, [a for a in args if a != ""])
-        elif c == "," and depth == 1:
-            args.append("".join(cur).strip())
-            cur = []
-            i += 1
-            continue
-        cur.append(c)
-        i += 1
-    return None
+    """Parse a bracketed argument list whose opener sits just before
+    ``i``; return (end_exclusive, top_level_args), or None when the
+    brackets never balance."""
+    try:
+        end = matching_close(sql, i - 1)
+    except ValueError:
+        return None
+    args = [a.strip() for a in split_top_level(sql[i : end - 1])]
+    return end, [a for a in args if a]
+
+
+@lru_cache(maxsize=2048)
+def _call_re(name: str) -> re.Pattern:
+    # cached here, not in re's own 512-entry cache: translate looks up
+    # several hundred call names, which would evict each other there
+    return re.compile(r"\b" + re.escape(name) + r"\s*\(")
 
 
 def _find_call(sql: str, name: str, start: int = 0) -> tuple[int, int, list[str]] | None:
     """Locate ``name( ... )`` at word boundary from ``start``; return
     (call_start, call_end_exclusive, top_level_args)."""
-    pat = re.compile(r"\b" + re.escape(name) + r"\s*\(")
-    m = pat.search(sql, start)
+    m = _call_re(name).search(sql, start)
     if not m:
         return None
     parsed = _parse_args(sql, m.end())
@@ -600,31 +593,13 @@ def _rewrite_limit_by(sql: str) -> str:
         by_exprs = tail.strip().rstrip(";").strip()
         final_limit = ""
     head = sql[: m.start()]
-    # find the LAST top-level (paren-depth-0) ORDER BY with a depth
-    # scanner, not a regex: a regex paren-pattern caps nesting depth and
-    # would silently DROP an ORDER BY like abs(least(v, 0)), ordering the
-    # window by the group exprs instead — wrong row per group
-    ob_start = ob_end = None
-    depth, i, up = 0, 0, head.upper()
-    ob_pat = re.compile(r"ORDER\s+BY\s+")
-    while i < len(head):
-        c = head[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            # match at position i without slicing (up[i:] would copy the
-            # tail at every depth-0 char — quadratic on long queries)
-            m2 = ob_pat.match(up, i)
-            if m2:
-                ob_start, ob_end = i, m2.end()
-                i = m2.end()
-                continue
-        i += 1
-    if ob_start is not None:
-        order = head[ob_end:].strip()
-        inner = head[:ob_start].strip()
+    # the LAST top-level ORDER BY: a regex paren-pattern would cap nesting
+    # depth and silently DROP an ORDER BY like abs(least(v, 0)), ordering
+    # the window by the group exprs instead — wrong row per group
+    obs = list(find_top_level(head, r"ORDER\s+BY\s+"))
+    if obs:
+        order = head[obs[-1].end() :].strip()
+        inner = head[: obs[-1].start()].strip()
         outer_order = f" ORDER BY {order}"
     else:
         # CH returns ANY n rows per group without ORDER BY; pick a
@@ -734,6 +709,13 @@ def _log_quantize(x: str) -> str:
 # - histogram states bucket-count with count(*) per (keys, value) group;
 #   NULL values form a marker group that is dropped after the collect,
 #   matching collect_list's NULL-skip.
+# - map KEY ORDER differs, not content: two-level states are key-sorted
+#   (array_sort over the collected entries), while the expression-level
+#   histogram states keep first-appearance order. Every current consumer
+#   is order-insensitive — the -Merge folds combine by key (map_zip_with),
+#   and quantile finalization and the rollup reads sort the entries first
+#   (array_sort(map_entries(..))) — so only an order-sensitive comparison
+#   of raw state maps (e.g. a string-cast row hash) could tell them apart.
 #
 # Documented narrowing (error path only): a NULL map KEY — keys arrays
 # containing NULL — made the expression-level expansion raise
@@ -769,70 +751,6 @@ _HIST_STATE_FNS = (
 
 def _norm_expr(e: str) -> str:
     return re.sub(r"\s+", " ", e.strip()).lower()
-
-
-def _split_top_level(s: str) -> list[str]:
-    """Split at paren/bracket-depth-0 commas (string literals are masked
-    before any rewrite runs)."""
-    parts: list[str] = []
-    cur: list[str] = []
-    depth = 0
-    for c in s:
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        if c == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(c)
-    parts.append("".join(cur))
-    return parts
-
-
-def _find_top_level_kw(
-    s: str, kw_pattern: str, start: int = 0
-) -> tuple[int, int] | None:
-    """(start, end) of the first depth-0 match of ``kw_pattern``."""
-    pat = re.compile(kw_pattern, re.IGNORECASE)
-    depth = 0
-    i = start
-    n = len(s)
-    while i < n:
-        c = s[i]
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif depth == 0:
-            m = pat.match(s, i)
-            if m:
-                return (i, m.end())
-        i += 1
-    return None
-
-
-def _enclosing_select_block(sql: str, p: int) -> tuple[int, int] | None:
-    """(start, end) of the innermost SELECT block containing position
-    ``p``: the body of the nearest enclosing ``( SELECT ... )``, else the
-    whole statement when it is itself a top-level SELECT."""
-    stack: list[int] = []
-    for i in range(p):
-        c = sql[i]
-        if c == "(":
-            stack.append(i)
-        elif c == ")" and stack:
-            stack.pop()
-    for open_pos in reversed(stack):
-        j = _skip_ws(sql, open_pos + 1)
-        if sql[j : j + 6].upper() == "SELECT":
-            end = _balanced_paren_end(sql, open_pos)
-            return (open_pos + 1, end - 1)
-    j = _skip_ws(sql, 0)
-    if sql[j : j + 6].upper() == "SELECT":
-        return (j, len(sql))
-    return None
 
 
 def _parse_state_item(it: str) -> dict | None:
@@ -913,27 +831,25 @@ def _two_level_block(block: str) -> str | None:
     if m is None or re.match(r"(?is)\s*SELECT\s+DISTINCT\b", block):
         return None
     sel_start = m.end()
-    fr = _find_top_level_kw(block, r"\bFROM\b", sel_start)
+    fr = next(find_top_level(block, r"FROM\b", sel_start), None)
     if fr is None:
         return None
-    items = [i.strip() for i in _split_top_level(block[sel_start : fr[0]])]
-    gb = _find_top_level_kw(block, r"\bGROUP\s+BY\b", fr[1])
-    if gb is None:
+    items = [i.strip() for i in split_top_level(block[sel_start : fr.start()])]
+    # exactly one top-level GROUP BY: a second one after ours would mean
+    # a shape this parser does not understand
+    gbs = list(find_top_level(block, r"GROUP\s+BY\b", fr.end()))
+    if len(gbs) != 1:
         return None
-    from_part = block[fr[1] : gb[0]].strip()
-    gb_tail = block[gb[1] :]
-    if not from_part or _find_top_level_kw(
+    from_part = block[fr.end() : gbs[0].start()].strip()
+    gb_tail = block[gbs[0].end() :]
+    if not from_part or any(find_top_level(
         gb_tail,
-        r"\b(HAVING|ORDER\s+BY|LIMIT|UNION|INTERSECT|EXCEPT|WINDOW"
+        r"(HAVING|ORDER\s+BY|LIMIT|UNION|INTERSECT|EXCEPT|WINDOW"
         r"|DISTRIBUTE\s+BY|SORT\s+BY|CLUSTER\s+BY|QUALIFY"
         r"|GROUPING\s+SETS|ROLLUP|CUBE|WITH)\b",
-    ):
+    )):
         return None
-    # a second top-level GROUP BY after ours would mean a shape this
-    # parser does not understand
-    if _find_top_level_kw(block, r"\bGROUP\s+BY\b", gb[1]) is not None:
-        return None
-    gb_items = [g.strip() for g in _split_top_level(gb_tail)]
+    gb_items = [g.strip() for g in split_top_level(gb_tail)]
     gb_items = [g.rstrip("; \n\t") for g in gb_items]
     if not gb_items or not all(gb_items):
         return None
@@ -1075,13 +991,21 @@ def _rewrite_state_two_level(sql: str) -> str:
                 found = (fn, f)
         if found is None:
             return sql
-        blk = _enclosing_select_block(sql, found[1][0])
-        new_block = _two_level_block(sql[blk[0] : blk[1]]) if blk else None
+        blk = owning_select(sql, found[1][0])
+        new_block = None
+        if blk is not None:
+            # only a whole statement or a '(' subquery body that starts
+            # with SELECT (a CTE-led block keeps the fallback)
+            lead = sql[: blk[0]].rstrip()
+            if lead == "" or lead.endswith("("):
+                new_block = _two_level_block(sql[blk[0] : blk[1]])
         if new_block is None:
             pos = found[1][1]  # leave this call to the fallback expansion
             continue
-        sql = sql[: blk[0]] + new_block + sql[blk[1] :]
-        pos = blk[0] + len(new_block)
+        # a subquery's rewrite also replaces the blank run after its '('
+        start = len(lead) if lead else blk[0]
+        sql = sql[:start] + new_block + sql[blk[1] :]
+        pos = start + len(new_block)
 
 
 # --------------------------------------------------------------------------
@@ -1101,14 +1025,12 @@ _ANY_JOIN_PAT = re.compile(
 )
 
 #: keywords that terminate an ON condition at paren-depth 0
-_ON_END_KEYWORDS = frozenset(
-    {
-        "where", "group", "order", "having", "limit", "union", "except",
-        "intersect", "settings", "format", "window", "join", "left",
-        "right", "inner", "full", "cross", "any", "asof", "global",
-        "semi", "anti",
-    }
+_ON_END_KEYWORDS = (
+    "where|group|order|having|limit|union|except|intersect|settings"
+    "|format|window|join|left|right|inner|full|cross|any|asof|global"
+    "|semi|anti"
 )
+_ON_END = rf",|[)\]]|(?:{_ON_END_KEYWORDS})\b"
 
 
 def _skip_ws(s: str, i: int) -> int:
@@ -1117,90 +1039,11 @@ def _skip_ws(s: str, i: int) -> int:
     return i
 
 
-def _balanced_paren_end(s: str, i: int) -> int:
-    """``s[i]`` is ``(``; return the index just past its matching ``)``."""
-    depth = 0
-    n = len(s)
-    while i < n:
-        c = s[i]
-        if c == "'":
-            j = i + 1
-            while j < n and s[j] != "'":
-                j += 1
-            i = j + 1
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    raise ValueError("unbalanced parentheses in join clause rewrite")
-
-
 def _on_condition_end(sql: str, i: int) -> int:
-    depth = 0
-    n = len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            j = i + 1
-            while j < n and sql[j] != "'":
-                j += 1
-            i = j + 1
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            if depth == 0:
-                return i  # closing the enclosing subquery
-            depth -= 1
-        elif c == "," and depth == 0:
-            return i
-        elif depth == 0 and (c.isalpha() or c == "_"):
-            mw = re.match(r"[A-Za-z_]\w*", sql[i:])
-            # a keyword-looking token right after '.' is the field part
-            # of a qualified name (l.asof, t.window), not a clause end
-            if (
-                mw.group(0).lower() in _ON_END_KEYWORDS
-                and not (i > 0 and sql[i - 1] == ".")
-            ):
-                return i
-            i += mw.end()
-            continue
-        i += 1
-    return n
-
-
-def _split_and_top_level(cond: str) -> list[str]:
-    parts: list[str] = []
-    depth, i, start, n = 0, 0, 0, len(cond)
-    while i < n:
-        c = cond[i]
-        if c == "'":
-            j = i + 1
-            while j < n and cond[j] != "'":
-                j += 1
-            i = j + 1
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0 and c in "aA":
-            mm = re.match(r"AND\b", cond[i:], re.IGNORECASE)
-            prev_ok = i == 0 or not (
-                cond[i - 1].isalnum() or cond[i - 1] in "_."
-            )
-            if mm and prev_ok:
-                parts.append(cond[start:i])
-                i += 3
-                start = i
-                continue
-        i += 1
-    parts.append(cond[start:])
-    return parts
+    """End of an ON condition: a top-level ``,`` or clause/join keyword,
+    the enclosing ``)``, or the end of ``sql``."""
+    m = next(find_top_level(sql, _ON_END, i), None)
+    return m.start() if m else len(sql)
 
 
 def _right_keys_from_on(cond: str, right_name: str) -> list[str]:
@@ -1211,7 +1054,7 @@ def _right_keys_from_on(cond: str, right_name: str) -> list[str]:
     if "." in right_name:
         names.add(right_name.rsplit(".", 1)[-1].lower())
     keys: list[str] = []
-    for term in _split_and_top_level(cond):
+    for term in split_top_level(cond, r"AND\b"):
         mm = re.fullmatch(
             r"\s*([A-Za-z_][\w.]*)\s*=\s*([A-Za-z_][\w.]*)\s*", term
         )
@@ -1243,7 +1086,7 @@ def _parse_joined_relation(
     optional alias at ``sql[i:]``, for the joined side of a rewritten
     join. Returns ``(rel, rel_is_subquery, out_alias, next_pos)``."""
     if i < len(sql) and sql[i] == "(":
-        j = _balanced_paren_end(sql, i)
+        j = matching_close(sql, i)
         rel = sql[i:j]
         rel_is_subquery = True
     else:
@@ -1297,7 +1140,7 @@ def _rewrite_any_joins(sql: str) -> str:
         c = _skip_ws(sql, k + mk.end())
         if mk.group(1).upper() == "USING":
             if c < len(sql) and sql[c] == "(":
-                e = _balanced_paren_end(sql, c)
+                e = matching_close(sql, c)
                 cols_text = sql[c + 1 : e - 1]
                 clause_end = e
             else:
@@ -1396,7 +1239,7 @@ def _classify_asof_on(
 
     keys: list[str] = []
     ineq: tuple[str, str, str] | None = None
-    for term in _split_and_top_level(cond):
+    for term in split_top_level(cond, r"AND\b"):
         me = _SIMPLE_EQ_PAT.fullmatch(term)
         if me:
             sides = [me.group(1), me.group(2)]
@@ -1443,101 +1286,18 @@ def _classify_asof_on(
     return keys, ineq
 
 
-def _owning_select_kw(sql: str, pos: int) -> int | None:
-    """Index of the SELECT keyword owning position ``pos`` (the
-    innermost SELECT at the same paren depth), or None."""
-    depth = 0
-    sel_at_depth: dict[int, int] = {}
-    i = 0
-    while i < pos:
-        c = sql[i]
-        if c == "'":
-            j = i + 1
-            while j < pos and sql[j] != "'":
-                j += 1
-            i = j + 1
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            sel_at_depth.pop(depth, None)
-            depth -= 1
-        elif c.isalpha() or c == "_":
-            mw = re.match(r"[A-Za-z_]\w*", sql[i:])
-            if mw.group(0).lower() == "select" and not (
-                i > 0 and sql[i - 1] == "."
-            ):
-                sel_at_depth[depth] = i
-            i += mw.end()
-            continue
-        i += 1
-    return sel_at_depth.get(depth)
-
-
 def _owning_select_items(sql: str, pos: int) -> list[str]:
     """Top-level select-list items of the SELECT that owns position
-    ``pos`` (the innermost SELECT at the same paren depth). Empty list if
-    none found (defensive — a join always follows a SELECT's FROM)."""
-    kw = _owning_select_kw(sql, pos)
-    if kw is None:
+    ``pos``. Empty list if none found (defensive — a join always follows
+    a SELECT's FROM)."""
+    blk = owning_select(sql, pos)
+    if blk is None:
         return []
-    start = kw + len("select")
-    # select list runs to the owning FROM at the same depth
-    d2 = 0
-    i = start
-    n = len(sql)
-    end = n
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            j = i + 1
-            while j < n and sql[j] != "'":
-                j += 1
-            i = j + 1
-            continue
-        if c == "(":
-            d2 += 1
-        elif c == ")":
-            if d2 == 0:
-                end = i
-                break
-            d2 -= 1
-        elif d2 == 0 and (c.isalpha() or c == "_"):
-            mw = re.match(r"[A-Za-z_]\w*", sql[i:])
-            # same dot-guard as the clause scanners: t.from is a field
-            if mw.group(0).lower() == "from" and not (
-                i > 0 and sql[i - 1] == "."
-            ):
-                end = i
-                break
-            i += mw.end()
-            continue
-        i += 1
-    items = _split_top_level_commas(sql[start:end])
+    start = blk[0] + len("select")
+    # the select list runs to the owning FROM (or the block's end)
+    fr = next(find_top_level(sql, r"FROM\b", start), None)
+    items = split_top_level(sql[start : fr.start() if fr else blk[1]])
     return [x.strip() for x in items if x.strip()]
-
-
-def _split_top_level_commas(text: str) -> list[str]:
-    parts: list[str] = []
-    depth, start, i, n = 0, 0, 0, len(text)
-    while i < n:
-        c = text[i]
-        if c == "'":
-            j = i + 1
-            while j < n and text[j] != "'":
-                j += 1
-            i = j + 1
-            continue
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif c == "," and depth == 0:
-            parts.append(text[start:i])
-            start = i + 1
-        i += 1
-    parts.append(text[start:])
-    return parts
 
 
 def _rewrite_asof_joins(sql: str) -> str:
@@ -1593,7 +1353,7 @@ def _rewrite_asof_joins(sql: str) -> str:
             # loudly in the analyzer (loud beats silently-wrong).
             c = _skip_ws(sql, k + mk.end())
             if c < len(sql) and sql[c] == "(":
-                e = _balanced_paren_end(sql, c)
+                e = matching_close(sql, c)
                 cols_text = sql[c + 1 : e - 1]
                 clause_end = e
             else:
@@ -1679,87 +1439,33 @@ _JOIN_STARTERS = frozenset(
 def _array_join_expr_end(sql: str, i: int) -> int:
     """End of one ARRAY JOIN item expression: top-level ``,``, ``AS``, a
     clause/join keyword, an enclosing ``)``, or end of string."""
-    depth = 0
-    n = len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            j = i + 1
-            while j < n and sql[j] != "'":
-                j += 1
-            i = j + 1
-            continue
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            if depth == 0:
-                return i
-            depth -= 1
-        elif c == "," and depth == 0:
-            return i
-        elif depth == 0 and (c.isalpha() or c == "_"):
-            mw = re.match(r"[A-Za-z_]\w*", sql[i:])
-            w = mw.group(0).lower()
-            if (w == "as" or w in _ON_END_KEYWORDS) and not (
-                i > 0 and sql[i - 1] == "."
-            ):
-                return i
-            i += mw.end()
-            continue
-        i += 1
-    return n
+    m = next(find_top_level(sql, rf"(?:as\b)|{_ON_END}", i), None)
+    return m.start() if m else len(sql)
 
 
-def _owning_select_block(sql: str, pos: int) -> tuple[int, int]:
-    """Span ``(start, end)`` of the SELECT block that owns position
-    ``pos``: from its SELECT keyword to the ``)`` closing the block (or
-    end of string). ``(0, len(sql))`` if no owning SELECT is found."""
-    kw = _owning_select_kw(sql, pos)
-    start = 0 if kw is None else kw
-    d2 = 0
-    i = pos
-    n = len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            j = i + 1
-            while j < n and sql[j] != "'":
-                j += 1
-            i = j + 1
-            continue
-        if c == "(":
-            d2 += 1
-        elif c == ")":
-            if d2 == 0:
-                return start, i
-            d2 -= 1
-        i += 1
-    return start, n
+def _bare_ident_re(name: str) -> re.Pattern:
+    """A literal (group ``lit``), a subquery opener (group ``sub``), or a
+    standalone occurrence of ``name``: not qualified by ``.``, not part of
+    a longer word or a ``\\x00``-masked literal token, not a call."""
+    return re.compile(
+        rf"(?P<lit>{LITERAL.pattern})"
+        r"|(?P<sub>\((?=[\s(]*(?i:SELECT|WITH)\b))"
+        rf"|(?<![\w.$\x00]){re.escape(name)}(?![\w\x00])(?!\s*\()",
+        re.DOTALL,
+    )
 
 
 def _contains_bare_ident(text: str, name: str) -> bool:
-    """True when a standalone (unqualified, non-call, unmasked)
-    occurrence of ``name`` exists outside string literals."""
-    for m in re.finditer(rf"(?<![\w.$\x00]){re.escape(name)}(?![\w\x00])",
-                         text):
-        k = _skip_ws(text, m.end())
-        if k < len(text) and text[k] == "(":
-            continue
-        # inside a string literal?
-        if text.count("'", 0, m.start()) % 2 == 1:
-            continue
-        return True
-    return False
+    """True when a standalone occurrence of ``name`` exists outside
+    string literals."""
+    return any(m.lastgroup is None for m in _bare_ident_re(name).finditer(text))
 
 
 def _replace_bare_ident(text: str, name: str, repl: str) -> str:
-    """Replace standalone identifier occurrences of ``name`` (not
-    qualified by ``.``, not part of a longer word, not a function call,
-    not inside a ``\\x00``-masked literal token) outside string
-    literals. Fails loudly when the rewrite would be ambiguous: a
-    nested ``(SELECT ...)`` scope or a lambda parameter that shadows
-    ``name`` resolves differently in CH than a blind substitution
-    would."""
+    """Replace standalone occurrences of ``name`` outside string literals.
+    Fails loudly when the rewrite would be ambiguous: a nested
+    ``(SELECT ...)`` scope or a lambda parameter that shadows ``name``
+    resolves differently in CH than a blind substitution would."""
     # a lambda parameter named ``name`` (single or parenthesized list)
     # shadows the element alias inside its body — a text substitution
     # would rewrite both declaration and body uses
@@ -1775,18 +1481,12 @@ def _replace_bare_ident(text: str, name: str, repl: str) -> str:
                 f"ARRAY JOIN element {name!r} is shadowed by a lambda "
                 "parameter of the same name; rename one of them"
             )
+    pat = _bare_ident_re(name)
     out: list[str] = []
-    i, n = 0, len(text)
-    while i < n:
-        c = text[i]
-        if c == "'":
-            j = i + 1
-            while j < n and text[j] != "'":
-                j += 1
-            out.append(text[i : j + 1])
-            i = j + 1
-            continue
-        if c == "(":
+    i = 0
+    while (m := pat.search(text, i)) is not None:
+        out.append(text[i : m.start()])
+        if m.lastgroup == "sub":
             # a nested subquery is its own name scope: a bare ``name``
             # inside it resolves to the INNER relation's column in CH
             # (or correlates outward only when absent there) — a text
@@ -1795,42 +1495,20 @@ def _replace_bare_ident(text: str, name: str, repl: str) -> str:
             # plain, CTE (WITH ... SELECT) and parenthesized set-op
             # ((SELECT ...) UNION ...) spellings; a parenthesized
             # arithmetic group is NOT a scope and substitutes normally.
-            k = _skip_ws(text, i + 1)
-            while k < len(text) and text[k] == "(":
-                k = _skip_ws(text, k + 1)
-            if re.match(r"(?:SELECT|WITH)\b", text[k:], re.IGNORECASE):
-                j = _balanced_paren_end(text, i)
-                if _contains_bare_ident(text[i:j], name):
-                    raise ValueError(
-                        f"ARRAY JOIN element {name!r} is referenced "
-                        "inside a nested subquery, where CH scoping "
-                        "rules are ambiguous for a text rewrite; "
-                        "qualify or rename the inner column"
-                    )
-                out.append(text[i:j])
-                i = j
-                continue
-        if (c.isalpha() or c == "_") and text.startswith(name, i):
-            # space sentinels: '' is a substring of every string, so a
-            # bare boundary test with "" would treat begin/end-of-input
-            # as a word character and skip trailing occurrences
-            prev = text[i - 1] if i > 0 else " "
-            nxt = text[i + len(name)] if i + len(name) < n else " "
-            if (
-                not (prev.isalnum() or prev in "_.$\x00")
-                and not (nxt.isalnum() or nxt in "_\x00")
-            ):
-                k = _skip_ws(text, i + len(name))
-                if not (k < n and text[k] == "("):
-                    out.append(repl)
-                    i += len(name)
-                    continue
-            mw = re.match(r"[A-Za-z_]\w*", text[i:])
-            out.append(mw.group(0))
-            i += mw.end()
+            j = matching_close(text, m.start())
+            if _contains_bare_ident(text[m.start() : j], name):
+                raise ValueError(
+                    f"ARRAY JOIN element {name!r} is referenced "
+                    "inside a nested subquery, where CH scoping "
+                    "rules are ambiguous for a text rewrite; "
+                    "qualify or rename the inner column"
+                )
+            out.append(text[m.start() : j])
+            i = j
             continue
-        out.append(c)
-        i += 1
+        out.append(m.group() if m.lastgroup == "lit" else repl)
+        i = m.end()
+    out.append(text[i:])
     return "".join(out)
 
 
@@ -1922,7 +1600,7 @@ def _rewrite_array_joins(sql: str) -> str:
         # in-place and/or lockstep forms rewrite references inside the
         # owning SELECT block, so guard the constructs whose meaning the
         # rewrite could silently change
-        bs, be = _owning_select_block(sql, m.start())
+        bs, be = owning_select(sql, m.start()) or (0, len(sql))
         pre, post = sql[bs : m.start()], sql[i:be]
         for item_text in _owning_select_items(sql, m.start()):
             if re.match(r"(?is)^(?:DISTINCT\s+|ALL\s+)?\*", item_text):
@@ -2043,16 +1721,7 @@ def translate(
     """Translate a ClickHouse SQL string to Spark SQL (module docstring)."""
     # mask string literals so no rule rewrites quoted text ('argMax(x)' as
     # a VALUE must survive untouched); restored verbatim at the end
-    literals: list[str] = []
-
-    def _mask(m: re.Match) -> str:
-        literals.append(m.group(0))
-        return f"\x00L{len(literals) - 1}\x00"
-
-    # both CH escape styles: doubled quotes ('don''t') AND backslash
-    # escapes ('don\'t') — else the rename pass could rewrite function
-    # names appearing inside string VALUES
-    out = re.sub(r"'(?:[^'\\]|\\.|'')*'", _mask, sql)
+    out, literals = mask_literals(sql)
 
     # CH resolves function names that exist in standard SQL
     # case-INSENSITIVELY (POSITION, ANY, COUNT, SUM, ...). Two of them
@@ -3456,21 +3125,8 @@ def translate(
             r"(?s)\s*\(\s*(\w+)\s*,\s*(\w+)\s*\)\s*->\s*\((.*)\)\s*",
             a[0],
         )
-        body_parts = None
-        if m2:
-            depth, cut = 0, None
-            body = m2.group(3)
-            for i, c in enumerate(body):
-                if c in "([":
-                    depth += 1
-                elif c in ")]":
-                    depth -= 1
-                elif c == "," and depth == 0:
-                    cut = i
-                    break
-            if cut is not None:
-                body_parts = (body[:cut], body[cut + 1:])
-        if not m2 or body_parts is None:
+        body_parts = split_top_level(m2.group(3)) if m2 else []
+        if len(body_parts) < 2:
             raise ValueError(
                 "mapApply: only a literal (k, v) -> (key_expr, val_expr) "
                 "lambda is translated"
@@ -3487,7 +3143,7 @@ def translate(
         return (
             f"map_from_entries(transform(map_entries({a[1]}), __e -> "
             f"named_struct('key', {sub(body_parts[0])}, "
-            f"'value', {sub(body_parts[1])})))"
+            f"'value', {sub(','.join(body_parts[1:]))})))"
         )
 
     out = _rewrite_calls(out, "mapApply", _map_apply)
@@ -4041,10 +3697,9 @@ def translate(
         t = text.strip()
         if not (t.startswith("[") and t.endswith("]")):
             return None
-        inner = t[1:-1]
-        parsed = _parse_args(inner + ")", 0)
-        if parsed is None or parsed[0] != len(inner) + 1:
-            return None  # stray ')' — not a plain literal list
+        parsed = _parse_args(t, 1)
+        if parsed is None or parsed[0] != len(t):
+            return None  # stray closer — not a plain literal list
         return parsed[1]
 
     def _transform_fn(a):
@@ -6617,9 +6272,7 @@ def translate(
         else:
             out = _rewrite_calls(out, ch_fn, lambda a: a[0])
 
-    return re.sub(
-        r"\x00L(\d+)\x00", lambda m: literals[int(m.group(1))], out
-    )
+    return unmask(out, literals)
 
 
 def _interval_text(ch_interval: str) -> str:

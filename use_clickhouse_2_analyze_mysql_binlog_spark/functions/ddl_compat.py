@@ -89,7 +89,10 @@ module parses it and emits the equivalent Spark-side plan:
 Loud policy matches :mod:`ch_compat`: constructs outside the table
 (unknown engines, exotic TTL expressions, malformed projection
 bodies, comma-chained ALTER command lists) raise ``ValueError``
-rather than translating silently-wrong.
+rather than translating silently-wrong. Statements are parsed with their
+literals masked, and every item split, bracket match and clause search
+follows the one lexical contract in :mod:`sqllex`, shared with
+:mod:`ch_compat`.
 """
 
 from __future__ import annotations
@@ -100,6 +103,15 @@ from dataclasses import dataclass, field
 from use_clickhouse_2_analyze_mysql_binlog_spark.functions.ch_compat import (
     _ch_type_to_spark,
     translate,
+)
+from use_clickhouse_2_analyze_mysql_binlog_spark.functions.sqllex import (
+    bracket_depth,
+    find_top_level,
+    literal_end,
+    mask_literals,
+    matching_close,
+    split_top_level,
+    unmask,
 )
 
 # ------------------------------------------------------------------ model
@@ -164,7 +176,7 @@ def _agg_state(ch_type: str) -> tuple[str, str] | None:
         # known-variance z test: the t-test moment struct (q fields
         # unused but kept — ONE moment shape for the whole family);
         # the literal (var_x, var_y, conf) parameters ride the token
-        parts = _split_top_commas(arg)
+        parts = _comma_items(arg)
         numerics = ("tinyint", "smallint", "int", "bigint", "float", "double")
         if len(parts) != 2 or _ch_type_to_spark(parts[0]) not in numerics:
             return None
@@ -174,7 +186,7 @@ def _agg_state(ch_type: str) -> tuple[str, str] | None:
             return None
         if not params:
             return None
-        pparts = [p.strip() for p in _split_top_commas(params)]
+        pparts = _comma_items(params)
         if len(pparts) != 3 or not all(
             re.fullmatch(r"\d+(\.\d+)?", p) for p in pparts
         ):
@@ -188,7 +200,7 @@ def _agg_state(ch_type: str) -> tuple[str, str] | None:
         # bivariate moment states (round 10, same exact idiom as the
         # t-tests): corr family = struct<n,sx,sy,sxx,syy,sxy> over
         # both-non-NULL pairs; avgWeighted = (weighted sum, weight sum)
-        parts = _split_top_commas(arg)
+        parts = _comma_items(arg)
         numerics = ("tinyint", "smallint", "int", "bigint", "float", "double")
         if len(parts) != 2:
             return None
@@ -213,7 +225,7 @@ def _agg_state(ch_type: str) -> tuple[str, str] | None:
         # The finalizers live in functions/stats.py (pure-SQL lgamma /
         # incomplete-beta / erfc). Args must be (numeric, integer-index);
         # the CI-parametric t-test forms stay loud.
-        parts = _split_top_commas(arg)
+        parts = _comma_items(arg)
         if len(parts) != 2:
             return None
         v_spark = _ch_type_to_spark(parts[0])
@@ -235,7 +247,7 @@ def _agg_state(ch_type: str) -> tuple[str, str] | None:
             # parametric form beyond ('two-sided'[, 'asymp'|'auto'])
             # stays loud via the checks below
             if params:
-                pparts = [p.strip() for p in _split_top_commas(params)]
+                pparts = _comma_items(params)
                 if not 1 <= len(pparts) <= 2:
                     return None
                 if not re.fullmatch(r"'two-sided'", pparts[0]):
@@ -252,7 +264,7 @@ def _agg_state(ch_type: str) -> tuple[str, str] | None:
         # parameters ride the fn token like quantile's level
         alternative, continuity = "two-sided", "1"
         if params:
-            pparts = _split_top_commas(params)
+            pparts = _comma_items(params)
             if not 1 <= len(pparts) <= 2:
                 return None
             lm = re.fullmatch(r"\s*'(two-sided|greater|less)'\s*", pparts[0])
@@ -276,10 +288,10 @@ def _agg_state(ch_type: str) -> tuple[str, str] | None:
         # bigint, float→double, decimal→precision-38 cap) so the merge
         # fold's accumulator type is a fixed point; min/max keep the
         # value type. Nested key/value types stay loud.
-        parts = _split_top_commas(arg)
+        parts = _comma_items(arg)
         if len(parts) == 1:
             mm = re.fullmatch(r"(?is)\s*Map\s*\((.*)\)\s*", parts[0])
-            parts = _split_top_commas(mm.group(1)) if mm else []
+            parts = _comma_items(mm.group(1)) if mm else []
         else:
             inner = [
                 re.fullmatch(r"(?is)\s*Array\s*\((.*)\)\s*", p)
@@ -349,7 +361,7 @@ def _agg_state(ch_type: str) -> tuple[str, str] | None:
         if not params:
             return None  # CH requires at least one level on quantiles
         levels = []
-        for p in _split_top_commas(params):
+        for p in _comma_items(params):
             try:
                 lv = float(p)
             except ValueError:
@@ -443,7 +455,7 @@ class ProjectionDef:
         """ORDER BY as plain columns, or None if any item is an
         expression (no alternate physical layout is chosen silently)."""
         cols = []
-        for item in _split_top_commas(self.order_by or ""):
+        for item in _comma_items(self.order_by or ""):
             item = re.sub(r"(?i)\s+(ASC|DESC)$", "", item.strip())
             if not re.fullmatch(_IDENT, item):
                 return None
@@ -647,49 +659,11 @@ def _split_name(qname: str) -> tuple[str | None, str]:
     return (parts[0], parts[1]) if len(parts) == 2 else (None, parts[0])
 
 
-def _mask_literals(sql: str) -> tuple[str, list[str]]:
-    lits: list[str] = []
-
-    def repl(m: re.Match) -> str:
-        lits.append(m.group(0))
-        return f"\x00L{len(lits) - 1}\x00"
-
-    return re.sub(r"'(?:[^'\\]|\\.|'')*'", repl, sql), lits
-
-
-def _unmask(text: str, lits: list[str]) -> str:
-    return re.sub(r"\x00L(\d+)\x00", lambda m: lits[int(m.group(1))], text)
-
-
-def _balanced_span(s: str, open_idx: int) -> int:
-    """Index just past the ')' matching the '(' at ``open_idx``."""
-    depth = 0
-    for i in range(open_idx, len(s)):
-        if s[i] == "(":
-            depth += 1
-        elif s[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-    raise ValueError("unbalanced parentheses in DDL")
-
-
-def _split_top_commas(text: str) -> list[str]:
-    out, depth, cur = [], 0, []
-    for ch in text:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    tail = "".join(cur).strip()
-    if tail:
-        out.append(tail)
-    return out
+def _comma_items(text: str) -> list[str]:
+    """Stripped top-level comma items; an empty last item (``a, b,`` or an
+    empty ``text``) is dropped."""
+    items = [p.strip() for p in split_top_level(text)]
+    return items if items[-1] else items[:-1]
 
 
 _COL_HEAD = re.compile(rf"^({_IDENT})\s+([A-Za-z]\w*)")
@@ -716,8 +690,8 @@ _PROJECTION_HEAD = re.compile(rf"(?is)^PROJECTION\s+({_IDENT})\s*\(")
 def _parse_projection(name: str, body: str, lits: list[str]) -> ProjectionDef:
     """Parse a projection body: ``SELECT <list> [GROUP BY g] [ORDER BY o]``.
 
-    ``body`` arrives literal-MASKED and clauses are located by a
-    depth-aware scan — the select list routinely contains parenthesized
+    ``body`` arrives literal-MASKED and the clauses are the top-level
+    keyword hits — the select list routinely contains parenthesized
     calls with their own commas/keywords, and a string literal spelling
     ``' ORDER BY '`` must never hijack the clause split."""
     m = re.match(r"(?is)^SELECT\s+(.*)$", body.strip())
@@ -727,34 +701,15 @@ def _parse_projection(name: str, body: str, lits: list[str]) -> ProjectionDef:
             "'SELECT ... [GROUP BY ...] [ORDER BY ...]'"
         )
     rest = m.group(1)
-    kw_re = re.compile(r"(?i)\b(GROUP\s+BY|ORDER\s+BY)\b")
-    hits: list[tuple[int, int, str]] = []
-    depth = 0
-    i = 0
-    while i < len(rest):
-        ch = rest[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if depth == 0:
-            km = kw_re.match(rest, i)
-            if km:
-                hits.append(
-                    (i, km.end(), re.sub(r"\s+", " ", km.group(1).upper()))
-                )
-                i = km.end()
-                continue
-        i += 1
-    select_list = _unmask((rest[: hits[0][0]] if hits else rest), lits).strip()
+    hits = list(find_top_level(rest, r"(GROUP\s+BY|ORDER\s+BY)\b"))
+    select_list = unmask(rest[: hits[0].start()] if hits else rest, lits).strip()
     group_by = order_by = None
-    for j, (_, vstart, kw) in enumerate(hits):
-        vend = hits[j + 1][0] if j + 1 < len(hits) else len(rest)
-        val = _unmask(rest[vstart:vend], lits).strip()
-        if kw == "GROUP BY":
-            group_by = val
+    for h, nxt in zip(hits, hits[1:] + [None]):
+        val = unmask(rest[h.end() : nxt.start() if nxt else None], lits)
+        if h.group().upper().startswith("GROUP"):
+            group_by = val.strip()
         else:
-            order_by = val
+            order_by = val.strip()
     if not select_list:
         raise ValueError(f"PROJECTION {name}: empty select list")
     return ProjectionDef(
@@ -773,14 +728,14 @@ def _parse_columns(
     indexes: list[IndexDef] = []
     constraints: list[tuple[str, str]] = []
     projections: list[ProjectionDef] = []
-    for item in _split_top_commas(body):
+    for item in _comma_items(body):
         cm = _CONSTRAINT_DEF.match(item)
         if cm:
             # CH CONSTRAINT ... CHECK rejects inserts; the append-only
             # parquet path has no insert gate, so the plan surfaces it
             # as a runnable data-quality check (violations counted)
             constraints.append(
-                (_unquote(cm.group(1)), _unmask(cm.group(2), lits).strip())
+                (_unquote(cm.group(1)), unmask(cm.group(2), lits).strip())
             )
             continue
         im = _INDEX_DEF.match(item)
@@ -791,11 +746,11 @@ def _parse_columns(
             indexes.append(
                 IndexDef(
                     name=_unquote(im.group(1)),
-                    expr=_unmask(im.group(2), lits).strip(),
+                    expr=unmask(im.group(2), lits).strip(),
                     itype=im.group(3).lower(),
                     args=tuple(
                         a.strip()
-                        for a in _unmask(im.group(5) or "", lits).split(",")
+                        for a in unmask(im.group(5) or "", lits).split(",")
                         if a.strip()
                     ),
                     granularity=(
@@ -809,7 +764,7 @@ def _parse_columns(
             # projections are performance-only (CH picks them
             # automatically; answers never change) — each shape maps
             # to its honest analogue in plan_actions
-            close = _balanced_span(item, pm.end() - 1)
+            close = matching_close(item, pm.end() - 1)
             if item[close:].strip():
                 raise ValueError(
                     f"PROJECTION: trailing content after body: "
@@ -838,8 +793,8 @@ def _parse_columns(
         stripped = len(rest) - len(rest.lstrip())
         type_end = pos
         if rest[stripped : stripped + 1] == "(":
-            type_end = _balanced_span(item, pos + stripped)
-        ch_type = _unmask(item[m.start(2) : type_end] or m.group(2), lits)
+            type_end = matching_close(item, pos + stripped)
+        ch_type = unmask(item[m.start(2) : type_end] or m.group(2), lits)
         t = _COL_TAIL.match(item[type_end:] if type_end > pos else rest)
         if not t:
             raise ValueError(f"cannot parse column definition: {item!r}")
@@ -854,9 +809,9 @@ def _parse_columns(
                 name=_unquote(m.group(1)),
                 ch_type=ch_type.strip(),
                 spark_type=spark_type,
-                default=_unmask(t.group(1), lits) if t.group(1) else None,
+                default=unmask(t.group(1), lits) if t.group(1) else None,
                 comment=(
-                    _unmask(t.group(2), lits)[1:-1] if t.group(2) else None
+                    unmask(t.group(2), lits)[1:-1] if t.group(2) else None
                 ),
                 agg_fn=agg_fn,
             )
@@ -866,32 +821,16 @@ def _parse_columns(
 
 def _clause_split(tail: str) -> dict[str, str]:
     """Split the post-column-list tail into its top-level clauses."""
-    kw_re = re.compile(
-        r"(?i)\b(ENGINE\s*=|(?:PARTITION\s+BY|PRIMARY\s+KEY|ORDER\s+BY|"
-        r"SAMPLE\s+BY|TTL|SETTINGS|COMMENT)\b)"
-    )
-    hits = []
-    depth = 0
-    i = 0
-    while i < len(tail):
-        ch = tail[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if depth == 0:
-            m = kw_re.match(tail, i)
-            if m:
-                hits.append((i, m.end(), m.group(1)))
-                i = m.end()
-                continue
-        i += 1
+    hits = list(find_top_level(
+        tail,
+        r"ENGINE\s*=|(?:PARTITION\s+BY|PRIMARY\s+KEY|ORDER\s+BY"
+        r"|SAMPLE\s+BY|TTL|SETTINGS|COMMENT)\b",
+    ))
     out: dict[str, str] = {}
-    for j, (start, vstart, kw) in enumerate(hits):
-        vend = hits[j + 1][0] if j + 1 < len(hits) else len(tail)
-        key = re.sub(r"\s+", " ", kw.upper()).rstrip(" =").strip()
-        key = {"ENGINE": "ENGINE"}.get(key, key)
-        out[key] = tail[vstart:vend].strip().rstrip(";").strip()
+    for h, nxt in zip(hits, hits[1:] + [None]):
+        key = re.sub(r"\s+", " ", h.group().upper()).rstrip(" =").strip()
+        val = tail[h.end() : nxt.start() if nxt else None]
+        out[key] = val.strip().rstrip(";").strip()
     return out
 
 
@@ -902,7 +841,7 @@ def _parse_order_by(text: str) -> tuple[str, ...]:
     if t.startswith("("):
         t = t[1 : t.rindex(")")]
     cols = []
-    for item in _split_top_commas(t):
+    for item in _comma_items(t):
         item = re.sub(r"(?i)\s+(ASC|DESC)$", "", item.strip())
         if not re.fullmatch(_IDENT, item):
             raise ValueError(
@@ -924,7 +863,7 @@ def parse_statement(sql: str):
     Raises ``ValueError`` for anything that is not a CREATE TABLE /
     CREATE MATERIALIZED VIEW, and for constructs with no honest mapping.
     """
-    masked, lits = _mask_literals(sql.strip().rstrip(";"))
+    masked, lits = mask_literals(sql.strip().rstrip(";"))
 
     mv = re.match(
         rf"(?is)^CREATE\s+MATERIALIZED\s+VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?"
@@ -937,7 +876,7 @@ def parse_statement(sql: str):
         columns: list[ColumnDef] = []
         if rest.lstrip().startswith("("):
             open_idx = rest.index("(")
-            close = _balanced_span(rest, open_idx)
+            close = matching_close(rest, open_idx)
             columns, _, _, _ = _parse_columns(
                 rest[open_idx + 1 : close - 1], lits
             )
@@ -954,7 +893,7 @@ def parse_statement(sql: str):
                 "CREATE MATERIALIZED VIEW without AS SELECT is not "
                 "translated"
             )
-        select_ch = _unmask(as_m.group(1), lits)
+        select_ch = unmask(as_m.group(1), lits)
         return MatViewDdl(
             database=db,
             name=name,
@@ -1003,7 +942,7 @@ def parse_statement(sql: str):
     )
     if vw:
         db, name = _split_name(vw.group(1))
-        select_ch = _unmask(vw.group(2), lits)
+        select_ch = unmask(vw.group(2), lits)
         return ViewDdl(
             database=db, name=name,
             select_ch=select_ch, select_spark=translate(select_ch),
@@ -1012,7 +951,7 @@ def parse_statement(sql: str):
     rn = re.match(r"(?is)^RENAME\s+TABLE\s+(.+)$", masked)
     if rn:
         pairs = []
-        for item in _split_top_commas(rn.group(1)):
+        for item in _comma_items(rn.group(1)):
             m2 = re.match(
                 rf"(?is)^({_QNAME})\s+TO\s+({_QNAME})\s*$", item.strip()
             )
@@ -1062,7 +1001,7 @@ def parse_statement(sql: str):
     tail_start = tb.end()
     if masked[tb.end() : tb.end() + 1] == "(":
         open_idx = tb.end()
-        close = _balanced_span(masked, open_idx)
+        close = matching_close(masked, open_idx)
         columns, indexes, constraints, projections = _parse_columns(
             masked[open_idx + 1 : close - 1], lits
         )
@@ -1074,7 +1013,7 @@ def parse_statement(sql: str):
     as_select_ch = as_select_spark = None
     if as_pos < len(tail):
         as_m = re.search(r"(?is)\bAS\s+(SELECT\b.*)$", tail)
-        as_select_ch = _unmask(as_m.group(1), lits)
+        as_select_ch = unmask(as_m.group(1), lits)
         as_select_spark = translate(as_select_ch)
         tail = tail[:as_pos]
     elif re.match(r"(?is)^\s*AS\s", tail):
@@ -1098,7 +1037,7 @@ def parse_statement(sql: str):
     if not em:
         raise ValueError(f"cannot parse ENGINE clause: {clauses['ENGINE']!r}")
     engine = em.group(1)
-    engine_args = _unmask(em.group(3) or "", lits).strip()
+    engine_args = unmask(em.group(3) or "", lits).strip()
     replicated = engine.startswith("Replicated")
     family = engine[len("Replicated"):] if replicated else engine
 
@@ -1122,7 +1061,7 @@ def parse_statement(sql: str):
             )
         distributed_target = f"{args[1]}.{args[2]}"
 
-    ttl = _unmask(clauses["TTL"], lits) if "TTL" in clauses else None
+    ttl = unmask(clauses["TTL"], lits) if "TTL" in clauses else None
     ttl_months = ttl_days = None
     ttl_where = ttl_to = None
     ttl_group_by: tuple[str, ...] = ()
@@ -1164,7 +1103,7 @@ def parse_statement(sql: str):
                     )
                 ttl_group_by = tuple(_unquote(k) for k in ks)
                 sets = []
-                for item in _split_top_commas(gm.group(2)):
+                for item in _comma_items(gm.group(2)):
                     sm = re.match(
                         rf"(?s)^({_IDENT})\s*=\s*(.+)$", item.strip()
                     )
@@ -1194,12 +1133,12 @@ def parse_statement(sql: str):
         engine_args=engine_args,
         replicated=replicated,
         partition_by=(
-            _unmask(clauses["PARTITION BY"], lits)
+            unmask(clauses["PARTITION BY"], lits)
             if "PARTITION BY" in clauses
             else None
         ),
         order_by=(
-            _parse_order_by(_unmask(clauses["ORDER BY"], lits))
+            _parse_order_by(unmask(clauses["ORDER BY"], lits))
             if "ORDER BY" in clauses
             else ()
         ),
@@ -1225,7 +1164,7 @@ def _parse_dictionary(
 ) -> DictionaryDdl:
     db, name = _split_name(dc.group(1))
     open_idx = masked.index("(", dc.end() - 1)
-    close = _balanced_span(masked, open_idx)
+    close = matching_close(masked, open_idx)
     cols, _, _, _ = _parse_columns(masked[open_idx + 1 : close - 1], lits)
     tail = masked[close:]
     pk = re.search(
@@ -1246,8 +1185,8 @@ def _parse_dictionary(
         m2 = re.search(rf"(?is)\b{kw}\s*\(", tail)
         if not m2:
             return None
-        end = _balanced_span(tail, m2.end() - 1)
-        return _unmask(tail[m2.end() : end - 1], lits).strip()
+        end = matching_close(tail, m2.end() - 1)
+        return unmask(tail[m2.end() : end - 1], lits).strip()
 
     return DictionaryDdl(
         database=db, name=name, columns=cols, primary_key=keys,
@@ -1271,7 +1210,7 @@ def _parse_optimize(
         rest,
     )
     if pm and pm.group(1).upper() not in ("FINAL", "DEDUPLICATE"):
-        partition = _unmask(pm.group(1), lits).strip().strip("'")
+        partition = unmask(pm.group(1), lits).strip().strip("'")
         rest = pm.group(2).strip()
     fm = re.match(r"(?is)^FINAL\b\s*(.*)$", rest)
     if fm:
@@ -1319,12 +1258,12 @@ def _parse_alter(qname: str, cmd: str, lits: list[str]) -> AlterDdl:
             )
         return AlterDdl(
             database=db, name=name, action="delete",
-            where=_unmask(dm.group(1), lits).strip(),
+            where=unmask(dm.group(1), lits).strip(),
         )
     um = re.match(r"(?is)^UPDATE\s+(.+?)\s+WHERE\s+(.+)$", cmd)
     if um:
         sets = []
-        for item in _split_top_commas(um.group(1)):
+        for item in _comma_items(um.group(1)):
             sm = re.match(rf"(?s)^({_IDENT})\s*=\s*(.+)$", item.strip())
             if not sm:
                 raise ValueError(
@@ -1333,13 +1272,13 @@ def _parse_alter(qname: str, cmd: str, lits: list[str]) -> AlterDdl:
             sets.append(
                 (
                     _unquote(sm.group(1)),
-                    _unmask(sm.group(2), lits).strip(),
+                    unmask(sm.group(2), lits).strip(),
                 )
             )
         return AlterDdl(
             database=db, name=name, action="update",
             set_exprs=tuple(sets),
-            where=_unmask(um.group(2), lits).strip(),
+            where=unmask(um.group(2), lits).strip(),
         )
     pm = re.match(
         r"(?is)^(DROP|DETACH|ATTACH)\s+PARTITION\s+"
@@ -1347,7 +1286,7 @@ def _parse_alter(qname: str, cmd: str, lits: list[str]) -> AlterDdl:
         cmd,
     )
     if pm:
-        part = _unmask(pm.group(2), lits).strip().strip("'")
+        part = unmask(pm.group(2), lits).strip().strip("'")
         return AlterDdl(
             database=db, name=name,
             action=f"{pm.group(1).lower()}_partition",
@@ -1383,6 +1322,18 @@ def _parse_alter(qname: str, cmd: str, lits: list[str]) -> AlterDdl:
     )
 
 
+# CREATE/ALTER open a statement unconditionally; the maintenance keywords
+# only when followed by their object noun — a continuation line like
+# 'ALTER TABLE t\n  RENAME COLUMN a TO b' must NOT split (the bare-keyword
+# form broke multi-line ALTERs into two misleading parse errors).
+_STATEMENT_BOUNDARY = re.compile(
+    r"(?i)(?:CREATE|ALTER)\s"
+    r"|(?:OPTIMIZE|TRUNCATE|RENAME|EXCHANGE)\s+"
+    r"(?:TABLE|TABLES|DATABASE|DICTIONARY)\b"
+)
+_SCRIPT_STOP = re.compile(r"['`;]|--|\n[ \t]*")
+
+
 def split_statements(script: str) -> list[str]:
     """Split a DDL script on ';' outside string literals / backticked
     identifiers, stripping '--' line comments. A line STARTING with a
@@ -1399,72 +1350,39 @@ def split_statements(script: str) -> list[str]:
     first would truncate a literal containing ``--``."""
     out: list[str] = []
     cur: list[str] = []
-    depth = 0
-    at_line_start = True
-    i, n = 0, len(script)
-    # CREATE/ALTER open a statement unconditionally; the maintenance
-    # keywords only when followed by their object noun — a continuation
-    # line like 'ALTER TABLE t\n  RENAME COLUMN a TO b' must NOT split
-    # (review r08: the bare-keyword form broke multi-line ALTERs into
-    # two misleading parse errors).
-    boundary = re.compile(
-        r"(?i)(?:CREATE|ALTER)\s"
-        r"|(?:OPTIMIZE|TRUNCATE|RENAME|EXCHANGE)\s+"
-        r"(?:TABLE|TABLES|DATABASE|DICTIONARY)\b"
-    )
-    while i < n:
-        ch = script[i]
-        if (
-            at_line_start
-            and depth == 0
-            and boundary.match(script[i : i + 32])
-            and "".join(cur).strip()
-        ):
-            out.append("".join(cur).strip())
-            cur = []
-        if ch not in " \t":
-            at_line_start = ch == "\n"
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if script[j] == "\\":
-                    j += 2
-                    continue
-                if script[j] == "'":
-                    if j + 1 < n and script[j + 1] == "'":
-                        j += 2  # '' escape
-                        continue
-                    break
-                j += 1
-            cur.append(script[i : min(j + 1, n)])
+    depth, i, n = 0, 0, len(script)
+
+    def flush() -> None:
+        s = "".join(cur).strip()
+        if s:
+            out.append(s)
+        cur.clear()
+
+    while (m := _SCRIPT_STOP.search(script, i)) is not None:
+        j = m.start()
+        cur.append(script[i:j])
+        depth += bracket_depth(script[i:j])
+        tok = m.group()
+        if tok == "'":
+            i = literal_end(script, j)
+            cur.append(script[j:i])
+        elif tok == "`":
+            k = script.find("`", j + 1)
+            i = n if k == -1 else k + 1
+            cur.append(script[j:i])
+        elif tok == "--":
+            k = script.find("\n", j)
+            i = n if k == -1 else k  # the newline itself is kept
+        elif tok == ";":
+            flush()
             i = j + 1
-            continue
-        if ch == "`":
-            j = script.find("`", i + 1)
-            j = n - 1 if j == -1 else j
-            cur.append(script[i : j + 1])
-            i = j + 1
-            continue
-        if ch == "-" and script[i : i + 2] == "--":
-            j = script.find("\n", i)
-            i = n if j == -1 else j  # the newline itself is kept
-            continue
-        if ch == ";":
-            s = "".join(cur).strip()
-            if s:
-                out.append(s)
-            cur = []
-            i += 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        cur.append(ch)
-        i += 1
-    s = "".join(cur).strip()
-    if s:
-        out.append(s)
+        else:  # a line break and the next line's indent
+            cur.append(tok)
+            i = m.end()
+            if depth == 0 and _STATEMENT_BOUNDARY.match(script, i):
+                flush()
+    cur.append(script[i:])
+    flush()
     return out
 
 
@@ -2235,11 +2153,11 @@ def _projection_keys_metrics(
     raises rather than merging wrong."""
     gb_items = {
         re.sub(r"\s+", "", g).lower()
-        for g in _split_top_commas(pr.group_by or "")
+        for g in _comma_items(pr.group_by or "")
     }
     keys: list[str] = []
     metrics: list[str] = []
-    for item in _split_top_commas(pr.select_list):
+    for item in _comma_items(pr.select_list):
         am = re.match(rf"(?is)^(.*?)\s+AS\s+({_IDENT})\s*$", item.strip())
         expr, alias = (
             (am.group(1).strip(), _unquote(am.group(2)))
